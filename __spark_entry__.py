@@ -11,12 +11,17 @@ stays a thin adapter.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+_REPO = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -35,168 +40,26 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Driver-facing order. The driver verifies queries in dict order and
-# may budget-cap how many it checks per round (~50). r13 priority:
-# the 29 continuation-wave queries lead (waves 92-99: partitioned
-# txlog tables, GIF/ADPCM codecs, CUSUM streaming, the stats/ML/
-# graph additions), then the five early-r13 queries (maintain
-# decision table, indexed near-dup ingest, chunked runs test,
-# retention, clustered OPTIMIZE), then the r12 vintage, then every
-# previously-checked query sorted oldest-evidence-first
-# (alphabetical within one round vintage). As of r12 every
-# PREVIOUSLY-registered query has at least one green driver row, so
-# everything below the new head is re-verification.
-_PRIORITY = [
-    # round-13 continuation waves 92-101: no driver evidence yet —
-    # verified locally (tools/check_oracle.py) but first in line here
-    'orders_credit_scorecard', 'stats_gini_auc', 'events_power_law_hill',
-    'ml_nearest_centroid', 'stats_wilcoxon_signed_rank', 'stats_friedman',
-    'orders_price_elasticity', 'stats_odds_ratio_mh', 'window_downsample_m4',
-    'fn_business_days', 'stats_cronbach_alpha', 'stats_icc',
-    'pipeline_dedup_impact', 'sim_embedding_health', 'stats_cohens_d',
-    'stats_bland_altman',
-    'txlog_partitioned', 'txlog_partitioned_compact', 'stream_cusum_alarm',
-    'media_gif_decode', 'media_adpcm_roundtrip', 'graph_label_propagation',
-    'graph_katz_centrality', 'ml_gbt_two_stumps', 'ml_lda_fisher',
-    'ml_calibration_ece', 'stats_moments_merge', 'stats_brown_forsythe',
-    'stats_cramers_v', 'stats_negbinom_mom', 'stats_lin_ccc',
-    'stats_deming_regression', 'stats_mcnemar', 'stats_vif',
-    'stats_seasonal_strength', 'window_savitzky_golay', 'window_pacf',
-    'window_circular_stats', 'events_poisson_rate_test', 'text_sppmi',
-    'tokenizer_vocab_coverage', 'dq_mahalanobis_outliers',
-    'pipeline_epoch_allocation', 'orders_customer_npv', 'sim_matryoshka_topk',
-    'txlog_maintain', 'pipeline_near_ingest_indexed',
-    'stats_runs_test_chunked', 'txlog_retention', 'txlog_maintain_cluster',
-    'ml_pca_gram_compact', 'dedup_substring_keepone',
-    'pipeline_dedup_ingest_sink', 'sim_rrf_fusion', 'stats_jackknife',
-    'stats_permutation_test', 'doc_quality_gopher_ngrams',
-    'window_distance_profile', 'sim_ann_recall_eval',
-    'pipeline_dedup_threshold_sweep', 'txlog_history', 'window_ar1_halflife',
-    'events_burst_detect', 'tokenizer_fertility', 'agg_kmv_sketch', 'stats_rbo',
-    'text_mattr', 'join_allen_relations', 'fn_jaro_winkler', 'text_char_entropy',
-    'orders_abc_xyz', 'text_langid_eval', 'stats_kendall_tau',
-    'pipeline_dataset_card', 'window_ljung_box', 'stats_runs_test',
-    'stats_cohens_kappa', 'pipeline_budget_select', 'stats_power_mde',
-    'graph_degree_census', 'stocks_risk_ratios', 'join_asof_nearest',
-    'ml_pca_power', 'ml_pca_topk', 'ml_pca_project', 'dedup_pca_blocking',
-    'ml_pca_incremental', 'ml_pca_outliers', 'ml_top_correlations',
-    'txlog_timestamp_travel', 'txlog_stream_cdf_direct', 'text_heaps_law',
-    'stocks_gap_analysis', 'stocks_streaks', 'text_novelty_ratio',
-    'orders_revenue_bridge', 'text_js_divergence', 'media_h264_ipcm_decode',
-    'pipeline_chunk_audit', 'txlog_check_constraint', 'stream_session_dynamic',
-    'agg_histogram_equidepth', 'events_seasonal_anomaly',
-    'pipeline_cdc_chunk_dedup', 'stats_fdr_bh', 'window_sax_motifs',
-    'ml_logreg_newton', 'txlog_optimize_small', 'pipeline_ngram_coverage',
-    'tokenizer_bpe_apply', 'window_dtw', 'sim_mips_topk', 'stats_bootstrap_ci',
-    'stats_cuped', 'pipeline_systematic_resample', 'text_kneser_ney', 'graph_hits',
-    'window_lttb', 'window_holt_winters', 'text_proximity_search',
-    'graph_random_walk', 'stats_sprt', 'text_skipgram_pairs',
-    'geo_point_in_polygon', 'ml_decision_stump', 'txlog_deletion_vectors',
-    'stats_conformal_interval', 'fn_udtf_chunks', 'text_stylometry_delta',
-    'stats_granger', 'window_changepoint', 'orders_price_index', 'tpch_q21',
-    'tpch_q22', 'tpch_q3', 'tpch_q4', 'tpch_q5', 'tpch_q6', 'tpch_q7', 'tpch_q8',
-    'agg_bitwise_bool', 'agg_collect_ordered', 'agg_percentile_approx',
-    'agg_skew_kurt', 'agg_stddev_corr', 'agg_sum_f32', 'dedup_minhash_lsh',
-    'doc_quality_gopher', 'fn_crypto_hash', 'fn_date_arith', 'fn_explode',
-    'fn_least_greatest', 'fn_null_handling', 'fn_posexplode', 'fn_regexp',
-    'fn_string2', 'fn_trig', 'groupby_time_rollup', 'lang_detect',
-    'media_decode_real', 'media_features', 'media_frame_plan', 'media_resize',
-    'media_sample_frames', 'pipeline_contamination', 'sample_seeded',
-    'sample_stratified', 'setop_except_all', 'setop_intersect_all',
-    'setop_union_by_name', 'setop_union_distinct', 'sim_ivf_topk', 'sim_lsh_topk',
-    'text_bpe_tokens', 'text_winnow_fingerprints', 'tpch_q10', 'tpch_q12',
-    'tpch_q15', 'udf_group_zscore', 'udf_scalar_pandas', 'window_first_last',
-    'window_ntile', 'window_range_frame', 'agg_approx_distinct',
-    'agg_count_distinct', 'agg_filtered', 'agg_min_max', 'agg_percentile',
-    'agg_stats', 'agg_sum', 'distinct_pairs', 'filter_and', 'filter_eq',
-    'filter_ge', 'filter_gt', 'filter_le', 'filter_lt', 'filter_ne', 'fn_array',
-    'fn_array_ops', 'fn_conditional', 'fn_date', 'fn_json', 'fn_math', 'fn_string',
-    'groupby_cube', 'groupby_having', 'groupby_month', 'groupby_pivot',
-    'groupby_q1', 'groupby_rollup', 'join_anti', 'join_asof', 'join_dim',
-    'join_fact_agg', 'join_semi', 'join_star', 'media_avi_index',
-    'media_container_mjpeg', 'range_scan_price', 'setop_except', 'setop_intersect',
-    'setop_union_all', 'stream_tumbling_counts', 'topk_orders', 'topk_per_group',
-    'window_lag_lead', 'window_moving_avg', 'window_partitioned_sum',
-    'window_rank', 'window_rolling_max', 'window_rolling_min',
-    'window_running_total', 'agg_benford', 'agg_exact_median', 'agg_heavy_hitters',
-    'agg_histogram', 'agg_mode', 'agg_quantile_cube', 'agg_robust_stats',
-    'agg_sketch_union', 'analytics_skyline', 'doc_chunk_stride', 'dq_checks',
-    'events_concurrency', 'events_latency_bands', 'events_markov',
-    'events_retention', 'events_sessionize', 'graph_pagerank', 'graph_tree_depth',
-    'graph_triangles', 'groupby_unpivot', 'media_container_mp4', 'media_mp3_index',
-    'media_mp4_index', 'merge_incremental_agg', 'merge_scd2_customers',
-    'ml_kmeans_assign', 'ml_linreg_group', 'orders_rfm', 'pipeline_line_dedup',
-    'pipeline_pii_redact', 'pipeline_source_mix', 'pipeline_split_assign',
-    'profile_columns', 'sim_pq_topk', 'stream_tws_profile', 'text_ngram_lm',
-    'text_normalize', 'text_tfidf_topk', 'text_vocab_stats',
-    'tokenizer_bpe_merges', 'tpch_q11', 'tpch_q16', 'tpch_q20',
-    'window_dist_stats', 'window_drawdown', 'window_ewma', 'window_rolling_norm',
-    'agg_cms_sketch', 'agg_entropy', 'agg_gini', 'agg_group_median',
-    'basket_pairs', 'dedup_simhash', 'dq_key_skew', 'events_attribution',
-    'events_top_paths', 'fn_bit_ops', 'fn_variant', 'geo_range_join', 'graph_bfs',
-    'join_asof_tolerance', 'join_bloom_prune', 'join_fuzzy_parts',
-    'join_typo_names', 'media_phash_dedup', 'ml_knn_classify', 'sample_weighted',
-    'sample_weighted_group', 'sim_maxsim', 'skyline_partitioned_parity',
-    'stats_chi2', 'stats_ttest', 'stream_topk_windowed', 'stream_txlog_upsert',
-    'text_collocations', 'text_inverted_index', 'text_perplexity',
-    'tokenizer_bpe_batched', 'tpch_q2', 'tpch_q9', 'txlog_cdf', 'txlog_lifecycle',
-    'txlog_merge', 'txlog_skipping', 'txlog_time_travel', 'txlog_vacuum',
-    'window_acf', 'window_bollinger', 'window_cusum', 'window_resample',
-    'window_rsi', 'window_seasonal', 'window_vwap', 'basket_rules',
-    'dedup_clusters', 'dedup_embedding_clusters', 'dedup_exact',
-    'dedup_ngram_jaccard', 'doc_quality', 'events_funnel',
-    'filter_between_in_like', 'filter_empty', 'filter_or_not',
-    'filter_selection_vector', 'fn_lambda', 'fn_map_ops', 'graph_kcore',
-    'groupby_grouping_sets', 'groupby_mom_change', 'join_cross', 'join_full_outer',
-    'join_left_outer', 'join_range_bucketed', 'join_salted', 'merge_upsert_orders',
-    'orders_pareto', 'pipeline_clean_corpus', 'pipeline_token_pack',
-    'sim_cosine_topk', 'sim_embedding_dup', 'sim_quantized_topk', 'stats_ks',
-    'stats_psi', 'stocks_filter_agg', 'stocks_window_suite', 'stream_dedup_keys',
-    'stream_interval_join', 'stream_outer_join', 'stream_session_agg',
-    'stream_sliding_counts', 'stream_stateful_totals', 'subquery_correlated',
-    'subquery_in', 'subquery_scalar', 'text_fingerprint', 'text_stats', 'tpch_q13',
-    'tpch_q14', 'tpch_q17', 'tpch_q18', 'tpch_q19', 'window_partitioned_parity',
-    'window_rolling_median', 'agg_countmin_sketch', 'agg_mean_family',
-    'agg_winsorized_stats', 'dq_dp_counts', 'events_anomaly_mad',
-    'events_burstiness', 'fn_ip_cidr', 'fn_url_parse', 'geo_knn_suppliers',
-    'graph_assortativity', 'graph_jaccard', 'media_flac_decode',
-    'media_h264_probe', 'media_mp3_decode', 'ml_naive_bayes', 'orders_cohort_ltv',
-    'orders_holt_forecast', 'orders_survival_km', 'pipeline_containment_dedup',
-    'pipeline_dedup_incremental', 'pipeline_dsir_weights', 'pipeline_gumbel_topk',
-    'pipeline_gzip_ingest', 'pipeline_ppl_buckets', 'pipeline_temperature_mix',
-    'pipeline_url_dedup', 'stats_anova', 'stats_diff_in_diff', 'stats_mannwhitney',
-    'stats_spearman', 'stats_theil_sen', 'stocks_adx', 'stocks_atr', 'stocks_cci',
-    'stocks_heikin_ashi', 'stocks_macd', 'stocks_mfi', 'stocks_obv',
-    'stocks_stochastic', 'text_rake', 'txlog_bloom_lookup', 'txlog_dv_change_feed',
-    'txlog_idempotent_ingest', 'txlog_mv_incremental', 'txlog_restore',
-    'txlog_zorder', 'window_ema_exact', 'window_interpolate', 'window_kalman',
-    'window_rolling_slope', 'agg_bitmap_distinct', 'agg_hll_merge',
-    'agg_hll_sketch', 'agg_weighted_median', 'dedup_substring_apply',
-    'dedup_substring_exact', 'events_active_users', 'events_bot_detection',
-    'events_quadkey_rollup', 'events_shapley_attribution',
-    'events_time_to_convert', 'fn_base64_roundtrip', 'fn_levenshtein',
-    'graph_clustering_coeff', 'graph_modularity', 'join_dpp_dates',
-    'join_scd2_pointintime', 'ml_confusion_metrics', 'ml_pca_2d',
-    'ml_polyfit_series', 'ml_ridge_closed_form', 'orders_backlog_aging',
-    'orders_forecast_eval', 'pipeline_dedup_eval', 'pipeline_quality_ensemble',
-    'pipeline_substring_decontam', 'sim_bm25_search', 'stats_mann_kendall',
-    'stats_mutual_info', 'stocks_ichimoku', 'stocks_pivot_points',
-    'stocks_rolling_corr', 'stream_static_enrich', 'text_readability',
-    'text_zipf_fit', 'txlog_clone', 'txlog_column_mapping', 'txlog_drop_column',
-    'txlog_metadata_count', 'txlog_multi_txn', 'txlog_schema_evolution',
-    'txlog_stream_appends', 'txlog_stream_cdf', 'window_biquad_filter',
-    'window_goertzel_power', 'window_haar_dwt', 'window_hurst_rs',
-    'window_linear_detrend', 'window_peak_detection', 'window_spc_control',
-]
-def _driver_order(d: dict) -> dict:
-    head = [n for n in _PRIORITY if n in d]
-    seen = set(head)
-    rest = [n for n in d if n not in seen]
-    # previously-green basics: keep meaning-dense ones ahead of the
-    # ten single-comparator filter probes
-    tail_last = [n for n in rest if n.startswith("filter_")]
-    tail_first = [n for n in rest if not n.startswith("filter_")]
-    return {n: d[n] for n in head + tail_first + tail_last}
+def driver_rounds(repo: str = _REPO) -> list[tuple[int, dict]]:
+    """Every ``CORRECTNESS_r{N}.json`` the driver has written under
+    ``repo``, as ``(N, rows by query name)`` in round order."""
+    rounds = []
+    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m:
+            with open(path) as f:
+                rounds.append((int(m.group(1)), json.load(f)))
+    return sorted(rounds, key=lambda r: r[0])
+
+
+def _driver_order(d: dict, repo: str = _REPO) -> dict:
+    """Driver-facing order. The driver verifies queries in dict order
+    and may cap how many it checks per round (~50), so queries with no
+    driver row come first, then the rest by the round of their newest
+    row, oldest first; ties keep registry order. Each round's checked
+    sample thereby moves to the back of the next round's order."""
+    newest = {name: n for n, rows in driver_rounds(repo) for name in rows}
+    return {name: d[name] for name in sorted(d, key=lambda q: newest.get(q, 0))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,8 +1,9 @@
 """Benchmark harness (SURVEY §7.3, BASELINE.md E1/E2).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and times Spark AND the DuckDB oracle
-INTERLEAVED per query — 1 warm-up each, then alternating
+Runs the headline queries — those registered with a ``bench=`` tag
+(stockify_spark/registry.py) — at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on local[$SPARK_GRAFT_CPUS] and times Spark AND the
+DuckDB oracle INTERLEAVED per query — 1 warm-up each, then alternating
 spark/oracle/spark/oracle timed pairs (3 each, median). Back-to-back
 A/B timing means run-to-run machine load hits both engines equally
 instead of biasing whichever side ran while the box was busy (the
@@ -35,165 +36,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: one per operator family (SURVEY §2 + §7.6).
-BENCH_QUERIES = [
-    # F1/B1a — the reference's PRIMARY experiment (volume >= k,
-    # stockify.cu:226-246): the single most reference-faithful query
-    "filter_ge",
-    "filter_and",
-    "agg_stats",
-    "groupby_q1",
-    "window_partitioned_sum",
-    "window_moving_avg",
-    "topk_orders",
-    "range_scan_price",
-    "join_fact_agg",
-    "join_star",
-    "join_asof",
-    "tpch_q6",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q14",
-    "subquery_correlated",
-    "merge_upsert_orders",
-    "pipeline_clean_corpus",
-    "setop_union_all",
-    "stream_tumbling_counts",
-    "stream_session_agg",
-    "window_range_frame",
-    "fn_math",
-    "dedup_exact",
-    "text_stats",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "sim_cosine_topk",
-    "sim_embedding_dup",
-    "sim_ivf_topk",
-    # round-3-landed heavy hitters: regressions in the newest
-    # operators should show up in the bench, not be found by a judge
-    "dedup_simhash",
-    "sim_lsh_topk",
-    "sim_quantized_topk",
-    "media_decode_real",
-    "pipeline_token_pack",
-    "text_winnow_fingerprints",
-    # round-6-landed: second compressed container + hygiene ops,
-    # LM counts, iterative graph
-    "media_container_mp4",
-    "pipeline_pii_redact",
-    "text_tfidf_topk",
-    "text_ngram_lm",
-    "graph_pagerank",
-    "sim_pq_topk",
-    # round-6 wave 2: sessionization, time-series windows, skyline,
-    # triangle enumeration, normalization dedup
-    "events_sessionize",
-    "window_ewma",
-    "window_drawdown",
-    "analytics_skyline",
-    "graph_triangles",
-    "text_normalize",
-    # round-6 session 2: tokenizer training, chunking, heavy hitters,
-    # canonicalized fuzzy name join. tokenizer_bpe_merges (serial BPE:
-    # one shuffle + one bounded collect PER MERGE, the textbook
-    # semantics) is oracle-checked but no longer benched: its 15x
-    # ratio is the multi-job iteration floor of the serial algorithm
-    # at MB scale, not a plan defect, and the SCALE path —
-    # tokenizer_bpe_batched, one collect per ROUND of 8 merges — is
-    # the benched default below (r10 verdict task 5).
-    "doc_chunk_stride",
-    "agg_heavy_hitters",
-    "join_fuzzy_parts",
-    "ml_kmeans_assign",
-    "ml_linreg_group",
-    "agg_exact_median",
-    # TPC-H completion over the derived partsupp catalog
-    "tpch_q2",
-    "tpch_q9",
-    # round-7: batched BPE merge selection (the scale path)
-    "tokenizer_bpe_batched",
-    # round-7 family-gap fill — operator families implemented since
-    # round 2/3 but never benched: train/test contamination scan,
-    # language ID, duplicate CLUSTERING (the step after pair
-    # detection; its recursive-CTE oracle is one of the deliberately
-    # brute-force ones, like all-pairs jaccard), and distributional
-    # window stats. These also rebalance the suite toward queries
-    # with substantive oracle cost — the r6 composition overweighted
-    # iterative ops whose oracles measure closed-form work.
-    "pipeline_contamination",
-    "lang_detect",
-    "dedup_clusters",
-    "window_dist_stats",
-    # round-7 new operator: LM perplexity scoring (CCNet-style)
-    "text_perplexity",
-    # round-7 wave 3 family representatives: spatial range join
-    # (banded vs the oracle's cross join — Spark should WIN this
-    # one), string-similarity join (FastSS deletion neighborhoods
-    # vs all-pairs levenshtein), and inverted-index construction
-    # (both engines do real aggregation work)
-    "geo_range_join",
-    "join_typo_names",
-    "text_inverted_index",
-    # round-8 waves: one representative per new family with REAL
-    # oracle cost — counts-only NB classifier, RAKE phrase scoring,
-    # integer-rank weighted median, recursive Holt on the real
-    # monthly series, integer-sum assortativity, and the asymmetric
-    # containment join (its brute-force all-ordered-pairs oracle is
-    # the third deliberately-quadratic baseline, like jaccard's)
-    "ml_naive_bayes",
-    "text_rake",
-    "agg_weighted_median",
-    "orders_holt_forecast",
-    "graph_assortativity",
-    "pipeline_containment_dedup",
-    # round-9 representatives with real two-sided cost: hashed-ngram
-    # importance weighting (token bucketing + broadcast scoring on
-    # both engines), the Count-Min build (1024-counter sketch
-    # aggregate), and the grid-pruned exact geo kNN whose oracle
-    # stays the full cross join (the r9 superlinear fix — Spark
-    # answers from ~1/20 of the pair stream)
-    "pipeline_dsir_weights",
-    "agg_countmin_sketch",
-    "geo_knn_suppliers",
-    # round-10/11: the exact-substring dedup family (among the
-    # heaviest operators in the repo — hash-keyed exchanges since
-    # r11, so regressions here must be bench-visible), the runtime
-    # DPP probe (wall-clock ~neutral at MB scale, reported for
-    # trend; the bytes metric lives in extras.dpp_io_reduction),
-    # and the stream source's BATCH face (scratch table is cached
-    # by _scratch_table, so the timed leg is the partition-per-file
-    # Arrow read, not the table build)
-    "dedup_substring_exact",
-    "dedup_substring_apply",
-    "pipeline_substring_decontam",
-    "join_dpp_dates",
-    "txlog_stream_appends",
-    # r11: direct readChangeFeed face — per-commit executor-side diff
-    "txlog_stream_cdf_direct",
-    # r11: distributed PCA, the linear-algebra family representative —
-    # both engines pay a real n·d² Gram (Spark: per-partition numpy
-    # partials; oracle: the double-unnest aggregate), so the row has
-    # substantive two-sided cost. topk/project share the same front
-    # half and are oracle-checked but not triple-benched.
-    "ml_pca_power",
-    # txlog_lifecycle is deliberately NOT benched: its Spark side
-    # performs four real write/commit cycles while its oracle is a
-    # read-only SELECT stating the net effect — a correctness check,
-    # not an engine-to-engine time comparison. The write path's
-    # timing signal lives in the layout experiment below.
-]
-
-# Timed and reported, but EXCLUDED from the spark-vs-oracle ratio:
-# these queries' oracles are closed-form declarative SPECS of the
-# expected output (VALUES-shaped statements of what a correct decode
-# yields, ~1 ms of no-op SQL), while the Spark side does the real
-# codec work — dividing the two measures "JPEG decoder vs nothing",
-# not engine vs engine. Same precedent as txlog_lifecycle (excluded
-# from the bench set entirely): a correctness oracle is not a
-# baseline implementation. Their absolute times still count toward
-# total_query_sec and regressions in them stay visible per-query.
-CORRECTNESS_ONLY = {"media_decode_real", "media_container_mp4"}
-
 ORACLE_BUDGET_SEC = 20.0
 
 
@@ -217,18 +59,6 @@ def _canary(spark) -> float:
         F.sum((F.col("id") * 3) % 7)
     ).collect()
     return time.perf_counter() - t0
-
-
-def _oracle_con():
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count() or 8}")
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
 
 
 def _oracle_once(con, sql: str) -> float | None:
@@ -311,31 +141,6 @@ def time_oracle_solo(con, sql: str, iters: int = 3):
             )
         samples.append(o)
     return statistics.median(samples), False, samples
-
-
-# Oracles that historically burn the full ORACLE_BUDGET_SEC inside
-# DuckDB (brute-force all-pairs baselines for the bucketed dedup/knn
-# family, plus the unbounded-window distribution stats): their burn
-# used to land interleaved right beside the Spark timings of the very
-# same heavy queries, polluting them with cache/CPU pressure (r13
-# verdict task 2 — dedup_clusters read 3-6x its solo probe in full
-# runs). They are now timed in a SEPARATE pass after every Spark
-# timing has been taken. An oracle not listed here that still trips
-# the budget is handled exactly as before (recorded as a lower bound).
-DEFERRED_ORACLES = {
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "pipeline_containment_dedup",
-    "geo_knn_suppliers",
-    "window_dist_stats",
-    # r14: the two remaining multi-second oracles (13 s and ~10 s
-    # DuckDB medians). Reproduced: a 12 s duck burn immediately
-    # before a Spark iteration inflated dedup_minhash_lsh's next
-    # reading 2.2 s -> 5.5 s (cache/CPU pressure) — the same
-    # contamination class the deferred pass exists to remove.
-    "dedup_minhash_lsh",
-    "pipeline_contamination",
-}
 
 
 def layout_experiment(spark, sf_dir: str) -> dict[str, float]:
@@ -660,8 +465,8 @@ def ingest_sink_experiment(spark, sf_dir: str) -> dict:
     MinHash-LSH near-dup sink, and the state-store streaming dedup
     (dropDuplicates drain through a real checkpointed query). Fresh
     tmp destinations every run — these are honest write-path times,
-    not cached-scratch reads (which is why they live here and not in
-    BENCH_QUERIES)."""
+    not cached-scratch reads (which is why they live here and not among
+    the benched queries)."""
     from pyspark.sql import functions as F
 
     from stockify_spark.llm.dedup import (
@@ -846,13 +651,19 @@ def near_sink_history_experiment(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    from stockify_spark.registry import ORACLE, QUERIES
+    from stockify_spark.registry import (
+        BENCH,
+        ORACLE,
+        QUERIES,
+        bench_names,
+        oracle_con,
+    )
     from stockify_spark.session import get_spark
 
     spark = get_spark("stockify-bench")
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     with_oracle = os.environ.get("SPARK_GRAFT_BENCH_ORACLE", "1") != "0"
-    con = _oracle_con() if with_oracle else None
+    con = oracle_con(SF_DIR, os.cpu_count() or 8) if with_oracle else None
 
     # load canary baseline: median of 5 fixed jobs on the warm session
     _canary(spark)  # JIT/codegen warm-up, untimed
@@ -864,9 +675,9 @@ def main() -> None:
     interrupted: list[str] = []
     spark_iters: dict[str, list[float]] = {}
     oracle_iters: dict[str, list[float]] = {}
-    for name in BENCH_QUERIES:
+    for name in bench_names():
         canary_ms[name] = round(_canary(spark) * 1000, 1)
-        deferred = name in DEFERRED_ORACLES
+        deferred = BENCH[name] == "deferred"
         sql = ORACLE.get(name) if (with_oracle and not deferred) else None
         s_med, o_med, was_interrupted, s_raw, o_raw = time_pair(
             QUERIES[name], spark, con, sql
@@ -883,8 +694,8 @@ def main() -> None:
     # deferred heavy-oracle pass: all Spark timings are on disk above,
     # so the multi-second DuckDB burns below cannot contaminate them
     if with_oracle:
-        for name in BENCH_QUERIES:
-            if name not in DEFERRED_ORACLES or name not in ORACLE:
+        for name in bench_names("deferred"):
+            if name not in ORACLE:
                 continue
             o_med, was_interrupted, o_raw = time_oracle_solo(
                 con, ORACLE[name]
@@ -907,17 +718,17 @@ def main() -> None:
     extras["canary_ms"] = canary_ms  # per-query (BENCH_DETAIL only)
     extras["spark_iters"] = spark_iters  # raw per-iteration (detail only)
     extras["oracle_iters"] = oracle_iters  # raw per-iteration (detail only)
-    extras["deferred_oracles"] = sorted(DEFERRED_ORACLES)
+    extras["deferred_oracles"] = sorted(bench_names("deferred"))
     if with_oracle:
         extras["timing"] = "interleaved"
         extras["oracle_total_sec"] = round(sum(oracle_q.values()), 4)
         extras["oracle_interrupted_at_budget"] = interrupted
-        extras["correctness_only_excluded"] = sorted(CORRECTNESS_ONLY)
+        extras["correctness_only_excluded"] = sorted(bench_names("spec"))
         extras["oracle_queries"] = oracle_q
         comparable = {
             k: v
             for k, v in timings.items()
-            if k in oracle_q and k not in CORRECTNESS_ONLY
+            if k in oracle_q and BENCH[k] != "spec"
         }
         denom = sum(v for k, v in oracle_q.items() if k in comparable)
         extras["spark_comparable_sec"] = round(sum(comparable.values()), 4)

@@ -67,7 +67,7 @@ def stocks_rand(spark: SparkSession, n: int = 100_000, seed: int = 42, num_parti
 
 
 # Derived-partsupp hash constants — the SINGLE definition. The DuckDB
-# oracle CTE (registry_ext7._PS_CTE) interpolates these same values,
+# oracle CTE (queries.tpch._PS_CTE) interpolates these same values,
 # so the Spark expressions and the oracle SQL cannot drift apart
 # silently (an edit here changes both sides together).
 PS_QTY_MUL_PART, PS_QTY_MUL_SUPP, PS_QTY_MOD = 7, 13, 9999

@@ -3007,12 +3007,6 @@ def commit_multi(
     return mid
 
 
-def _has_mtxn(path: str, mid: str) -> bool:
-    return any(
-        a.get("mtxn") == mid for c in _read_log(path) for a in c["actions"]
-    )
-
-
 def _commit_mtxn(path: str, actions: list[dict], mid: str) -> None:
     """Commit a manifest entry AT MOST ONCE, race-free: a recoverer
     may run while the original writer is still alive (or two

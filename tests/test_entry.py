@@ -21,8 +21,23 @@ def test_queries_and_oracles_align():
     assert set(oracles) <= set(qs)
 
 
-def test_all_queries_run_at_smoke_sf(spark, sf_dir):
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, sf_dir)
-        assert df.columns, name
-        df.limit(5).collect()
+def test_driver_order_rotates_oldest_checked_to_front(tmp_path):
+    """Never-checked queries lead, then queries by the round of their
+    newest driver row, oldest first; ties keep registry order — so a
+    round's checked sample moves to the back of the next order."""
+    import json
+
+    def round_file(n, names):
+        rows = {q: {"rows_match": True} for q in names}
+        (tmp_path / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
+
+    registry = {q: None for q in ("a", "b", "c", "d", "e")}
+    round_file(1, ["a", "b"])
+    round_file(2, ["b", "c"])
+    assert list(entrymod._driver_order(registry, str(tmp_path))) == [
+        "d", "e", "a", "b", "c",
+    ]
+    round_file(10, ["d", "e"])  # numeric, not lexical, round order
+    assert list(entrymod._driver_order(registry, str(tmp_path))) == [
+        "a", "b", "c", "d", "e",
+    ]

@@ -1,4 +1,4 @@
-"""Pins for DTW distance (registry_ext44)."""
+"""Pins for DTW distance (queries.windows)."""
 
 from __future__ import annotations
 
@@ -28,7 +28,7 @@ def _dtw_matrix(xs, tpl):
 
 def test_dtw_matches_full_matrix_dp(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext44 import _N, _TPL, window_dtw
+    from stockify_spark.queries.windows import _N_DTW, _TPL, window_dtw
 
     ev = (
         _t(spark, SF_SMALL, "events")
@@ -40,21 +40,21 @@ def test_dtw_matches_full_matrix_dp(spark):
         series.setdefault(r.event_type, []).append(r.value)
     rows = {r.event_type: r for r in window_dtw(spark, SF_SMALL).collect()}
     expect = {
-        t: _dtw_matrix(np.array(v[:_N]), np.array(_TPL))
+        t: _dtw_matrix(np.array(v[:_N_DTW]), np.array(_TPL))
         for t, v in series.items()
-        if len(v) >= _N
+        if len(v) >= _N_DTW
     }
     assert set(rows) == set(expect)
     for t, want in expect.items():
         assert abs(rows[t].dtw - round(want, 6)) < 1e-9
-        assert rows[t].n_used == _N
+        assert rows[t].n_used == _N_DTW
         # the warping path must pay both endpoints
-        xs, tpl = series[t][:_N], _TPL
+        xs, tpl = series[t][:_N_DTW], _TPL
         assert rows[t].dtw >= abs(xs[0] - tpl[0]) + abs(xs[-1] - tpl[-1]) - 1e-9
 
 
 def test_dtw_identity_and_elasticity():
-    from stockify_spark.registry_ext44 import _TPL
+    from stockify_spark.queries.windows import _TPL
 
     tpl = np.array(_TPL)
     assert _dtw_matrix(tpl, tpl) == 0.0

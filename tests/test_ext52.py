@@ -1,4 +1,4 @@
-"""Pins for LTTB downsampling (registry_ext52)."""
+"""Pins for LTTB downsampling (queries.windows)."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import numpy as np
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext52 import _BK, _N, _NB
+from stockify_spark.queries.windows import _BK, _NB, _N_LTTB
 
 
 def _lttb_ref(y):
@@ -20,7 +20,7 @@ def _lttb_ref(y):
             cx = float(np.mean(np.arange(nlo, nlo + _BK)))
             cy = round(float(np.sum(y[nlo - 1 : nlo - 1 + _BK])), 6) / _BK
         else:
-            cx, cy = float(_N), y[_N - 1]
+            cx, cy = float(_N_LTTB), y[_N_LTTB - 1]
         best, pick = -1.0, None
         for x in range(lo, lo + _BK):
             area = abs((px - cx) * (y[x - 1] - py) - (px - x) * (cy - py))
@@ -28,13 +28,13 @@ def _lttb_ref(y):
                 best, pick = area, x
         out.append((pick, y[pick - 1]))
         px, py = float(pick), y[pick - 1]
-    out.append((_N, y[_N - 1]))
+    out.append((_N_LTTB, y[_N_LTTB - 1]))
     return out
 
 
 def test_lttb_matches_reference_and_keeps_endpoints(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext52 import window_lttb
+    from stockify_spark.queries.windows import window_lttb
 
     ev = (
         _t(spark, SF_SMALL, "events")
@@ -48,13 +48,13 @@ def test_lttb_matches_reference_and_keeps_endpoints(spark):
     for r in window_lttb(spark, SF_SMALL).collect():
         got.setdefault(r.event_type, []).append((r.pos, r.value))
     for t, vals in series.items():
-        if len(vals) < _N:
+        if len(vals) < _N_LTTB:
             assert t not in got
             continue
         want = _lttb_ref(np.array(vals))
         assert sorted(got[t]) == sorted(want)
         poss = sorted(p for p, _ in got[t])
-        assert poss[0] == 1 and poss[-1] == _N and len(poss) == _NB + 2
+        assert poss[0] == 1 and poss[-1] == _N_LTTB and len(poss) == _NB + 2
         # exactly one pick per interior bucket
         for b in range(1, _NB + 1):
             lo = 2 + (b - 1) * _BK
@@ -66,7 +66,7 @@ def test_lttb_keeps_the_spike():
     must be selected (its triangle dwarfs every flat candidate) —
     the property that makes LTTB a VISUAL downsampler rather than a
     decimator (plain every-10th sampling misses it)."""
-    y = np.zeros(_N)
+    y = np.zeros(_N_LTTB)
     spike_pos = 137  # interior, not on a bucket edge
     y[spike_pos - 1] = 50.0
     picks = {p for p, _ in _lttb_ref(y)}

@@ -1,7 +1,8 @@
 """Time the DuckDB oracle queries — the measurable stand-in for the
-reference's unpublished numbers (BASELINE.md E1). Runs each bench
-headline query's oracle SQL on the same parquet at $SPARK_GRAFT_SF_DIR
-(default sf0.1), 1 warm-up + 3 timed, median. Prints one JSON line:
+reference's unpublished numbers (BASELINE.md E1). Runs each benched
+query's oracle SQL on the same parquet at $SPARK_GRAFT_SF_DIR
+(default sf0.1), 1 warm-up + 3 timed, median, each run interrupted
+past $SPARK_GRAFT_ORACLE_BUDGET_SEC (default 60). Prints one JSON line:
 
     python tools/bench_oracle.py
 """
@@ -10,60 +11,29 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import threading
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def main() -> None:
-    from bench import BENCH_QUERIES
-    from stockify_spark.registry import ORACLE
+    import bench
+    from stockify_spark.registry import ORACLE, bench_names, oracle_con
 
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count() or 8}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-
+    # some oracles are deliberately brute-force — written for sf0.01
+    # correctness, quadratic at bench scale
     budget = float(os.environ.get("SPARK_GRAFT_ORACLE_BUDGET_SEC", "60"))
-
-    def timed_run(sql: str) -> float | None:
-        """One execution, interrupted past the per-query budget (some
-        oracles are deliberately brute-force — written for sf0.01
-        correctness, quadratic at bench scale)."""
-        timer = threading.Timer(budget, con.interrupt)
-        timer.start()
-        t0 = time.perf_counter()
-        try:
-            con.execute(sql).fetchall()
-            return time.perf_counter() - t0
-        except duckdb.Error:
-            return None
-        finally:
-            timer.cancel()
-
+    bench.ORACLE_BUDGET_SEC = budget
+    con = oracle_con(SF_DIR, os.cpu_count() or 8)
     timings: dict[str, float | str] = {}
-    for name in BENCH_QUERIES:
+    for name in bench_names():
         sql = ORACLE.get(name)
         if sql is None:
             continue  # rows-only queries have no SQL equivalent
-        if timed_run(sql) is None:  # warm-up (buffer cache, plan)
-            timings[name] = f">{budget:g}"
-            continue
-        samples = [timed_run(sql) for _ in range(3)]
-        ok = [s for s in samples if s is not None]
-        timings[name] = round(statistics.median(ok), 4) if ok else f">{budget:g}"
+        med, _, _ = bench.time_oracle_solo(con, sql)
+        timings[name] = f">{budget:g}" if med is None else round(med, 4)
 
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     finite = [v for v in timings.values() if isinstance(v, float)]

@@ -25,16 +25,15 @@ import os
 import sys
 from collections import Counter
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 
+# perfbench/make_fingerprints.py reads the table list from here
+from stockify_spark.sources.io import TABLES  # noqa: E402,F401
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def norm_value(v):
@@ -159,23 +158,17 @@ def pandas_path_problems(spark_pdf, duck_pdf):
 
 
 def main(only: list[str]) -> int:
-    from stockify_spark.registry import ORACLE, QUERIES
+    from stockify_spark.registry import ORACLE, QUERIES, oracle_con
     from stockify_spark.session import get_spark
 
     spark = get_spark("oracle-check", cpus=8)
-    con = duckdb.connect()
     # Optional DuckDB thread cap for SHARDED gate runs (r15): the
     # quadratic reference oracles take 30+ min each at sf0.1, and N
     # concurrent gates each defaulting to all-cores DuckDB thrash
     # the box into zero progress. Values verified thread-count-
     # independent for the float-boundary rows before adopting.
     th = os.environ.get("SPARK_GRAFT_ORACLE_THREADS")
-    if th:
-        con.execute(f"SET threads={int(th)}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_con(SF_DIR, int(th) if th else None)
 
     names = only or sorted(QUERIES)
     failures = []

@@ -16,8 +16,6 @@ window.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 import sys
@@ -47,17 +45,10 @@ def cell(rec: dict | None) -> str:
 def build_table() -> str:
     from stockify_spark.registry import ORACLE, QUERIES
 
-    rounds = sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
-    )
-    data = {}
-    labels = []
-    for path in rounds:
-        label = "r" + re.search(r"_r(\d+)", path).group(1)
-        labels.append(label)
-        with open(path) as f:
-            data[label] = json.load(f)
+    from __spark_entry__ import driver_rounds
+
+    data = {f"r{n:02d}": rows for n, rows in driver_rounds(REPO)}
+    labels = list(data)
 
     lines = [
         "| query | oracle | " + " | ".join(labels) + " | last green |",
@@ -83,7 +74,7 @@ def build_table() -> str:
         f"\n{len(QUERIES)} registered queries; "
         f"{len(QUERIES) - n_never} have at least one driver row across "
         f"{len(labels)} round(s); {n_never} still unchecked by the driver "
-        f"(they lead `_PRIORITY` in `__spark_entry__.py`).\n"
+        f"(they lead the driver order, `__spark_entry__._driver_order`).\n"
     )
     return "\n".join(lines) + "\n" + summary
 

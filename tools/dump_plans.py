@@ -2,7 +2,7 @@
 
     python tools/dump_plans.py <tag> <suffix> [name ...]
 
-With no names, dumps every query in bench.BENCH_QUERIES. Plans are
+With no names, dumps every benched query (registry.bench_names()). Plans are
 captured at sf0.001 (shape-identical across SFs; see plan_audit.py).
 """
 
@@ -23,13 +23,11 @@ def main() -> None:
         raise SystemExit(2)
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    from stockify_spark.registry import QUERIES
+    from stockify_spark.registry import QUERIES, bench_names
     from stockify_spark.session import get_spark
 
     if not names:
-        import bench
-
-        names = list(bench.BENCH_QUERIES)
+        names = bench_names()
     out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-dump", cpus=4)

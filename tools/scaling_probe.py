@@ -96,9 +96,9 @@ def _write(rows: list[tuple]) -> None:
 
 
 def main(only: list[str]) -> None:
-    from bench import BENCH_QUERIES, time_query
+    from bench import time_query
 
-    from stockify_spark.registry import QUERIES
+    from stockify_spark.registry import QUERIES, bench_names
     from stockify_spark.session import get_spark
 
     merged = _existing_rows()
@@ -108,7 +108,7 @@ def main(only: list[str]) -> None:
             names = names[: int(only[1])]
         print(f"{len(names)} unprobed queries", flush=True)
     else:
-        names = only or BENCH_QUERIES
+        names = only or bench_names()
 
     spark = get_spark("scaling-probe")
     for name in names:

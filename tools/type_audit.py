@@ -21,9 +21,6 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def duck_kind(t: str) -> str:
@@ -87,16 +84,11 @@ COMPATIBLE = {
 
 
 def audit(names=None):
-    import duckdb
-    from stockify_spark.registry import ORACLE, QUERIES
+    from stockify_spark.registry import ORACLE, QUERIES, oracle_con
     from stockify_spark.session import get_spark
 
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_con(SF_DIR)
     todo = names or list(ORACLE)
     bad = []
     for name in todo:
